@@ -146,7 +146,7 @@ final class WaveRunner(
   }
 
   // codegen'd scalar functions used in hot projections (idempotent)
-  graft.plans.HostOf.register(spark)
+  graft.plans.Kernels.register(spark)
 
   private val fetchSource = new FetchSource(spark, pagesInput, stateRoot, config)
 

@@ -564,7 +564,7 @@ object TextAnalysis {
     // semantics (equivalence is test-pinned); the kernel replaces
     // per-feature interpreted lambda dispatch + an interpreted
     // md5/conv/substring subtree per feature with one generated call
-    // into a tight loop — same VectorFold rationale.
+    // into a tight loop — same [[graft.plans.VectorExprs]] rationale.
     val tk = filter(split(lower(text), "[^a-z0-9_']+"), t => length(t) > 0)
     graft.plans.ClassifierScore.classifier_score(tk, lit(buckets))
   }

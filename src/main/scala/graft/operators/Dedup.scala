@@ -382,6 +382,12 @@ object Dedup {
     * Same banding semantics as [[minhashPairs]]; every step is a
     * built-in expression a DuckDB oracle states identically. The
     * xxhash permutation variant remains the raw-throughput path.
+    *
+    * Precondition: `idCol` is unique. The threshold filter runs below
+    * the pair dedup, which equals dedup-then-filter only because a
+    * pair of ids determines its two signatures; with a repeated id, a
+    * pair would survive if ANY copy passes the threshold instead of
+    * the one copy the dedup happened to keep.
     */
   def minhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
                            shingleK: Int = 3, numHashes: Int = 24,

@@ -112,7 +112,7 @@ object IvfIndex {
 
   /** Exact integer L2² between a quantized column and a literal
     * centroid (overflow-safe: |q| ≤ ~10⁵ ⇒ Σ diff² ≤ 2.6·10¹² « 2⁶³).
-    * Codegen'd expression ([[graft.plans.LongSqDist]]) — the HOF fold
+    * Codegen'd kernel ([[graft.plans.VectorExprs.longSqDist]]) — the HOF fold
     * form is CodegenFallback, and k of these run per row.
     */
   private def qDist(qv: Column, cent: Array[Long]): Column =

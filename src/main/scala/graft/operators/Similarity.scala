@@ -21,7 +21,7 @@ import graft.core.Hashing
 object Similarity {
 
   /** dot(a,b) over two array<float> cols — a native codegen'd
-    * expression ([[graft.plans.FloatDot]]) that replicates the
+    * kernel ([[graft.plans.VectorExprs.floatDot]]) that replicates the
     * `aggregate(zip_with(a,b,_*_), 0.0d, _+_)` fold BIT-EXACTLY
     * (float multiply, double accumulate, element order): the HOF form
     * is CodegenFallback and its interpreted lambdas made pair scoring
@@ -157,7 +157,7 @@ object Similarity {
     * stages of `bits` dot products each (guide §2.4; the dominant cost
     * of a cold run was that compilation). Row set and bucket values
     * are identical: same [[portablePlaneComponent]] literals through
-    * the same [[graft.plans.FloatDoubleDot]] fold.
+    * the same [[graft.plans.VectorExprs.floatDoubleDot]] fold.
     */
   private def bucketedPortable(df: DataFrame, idName: String, vecName: String,
                                dim: Int, bits: Int, tables: Int): DataFrame = {
@@ -212,7 +212,14 @@ object Similarity {
       .select("query_id", "neighbor_id", "cosine", "rank")
   }
 
-  /** [[cosineDupPairs]] over the portable signatures. */
+  /** [[cosineDupPairs]] over the portable signatures.
+    *
+    * Precondition: `id` is unique. The threshold filter runs below the
+    * pair dedup, which equals dedup-then-filter only because a pair of
+    * ids determines its cosine; with a repeated id (two vectors), a
+    * pair would survive if ANY copy passes the threshold instead of
+    * the one copy the dedup happened to keep.
+    */
   def cosineDupPairsPortable(df: DataFrame, threshold: Double, dim: Int,
                              bits: Int = 8, tables: Int = 6): DataFrame = {
     def bucketed(idName: String, vecName: String): DataFrame =

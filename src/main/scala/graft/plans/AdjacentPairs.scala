@@ -1,9 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -19,51 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * kernel is one tight generated loop.) Null token array → null,
   * dropped by explode like the former posexplode-of-null.
   */
-case class AdjacentPairs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(AdjacentPairs.Entry,
-    containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_adjacent_pairs"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs array<string>, got ${other.sql}")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = child.eval(input)
-    if (a == null) null
-    else AdjacentPairs.invoke(a.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.plans.AdjacentPairs.invoke(${c.isNull} ? null : ${c.value});
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): AdjacentPairs =
-    copy(child = newChild)
-}
-
 object AdjacentPairs {
   val Entry: StructType = StructType(Seq(
     StructField("prev", StringType, nullable = true),
     StructField("w", StringType, nullable = false)))
 
-  /** Static entry point shared by interpreted and generated code. */
   def invoke(arr: ArrayData): ArrayData = {
-    if (arr == null) return null
     val n0 = arr.numElements()
     val toks = new java.util.ArrayList[UTF8String](n0)
     var i = 0
@@ -87,14 +45,6 @@ object AdjacentPairs {
     new GenericArrayData(out)
   }
 
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def adjacent_pairs(tokens: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_adjacent_pairs", tokens)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_adjacent_pairs", es => AdjacentPairs(es.head), "built-in")
+  def adjacent_pairs(tokens: Column): Column =
+    Kernels.call("graft_adjacent_pairs", tokens)
 }

@@ -1,79 +1,19 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.UrlNormalizer
 
-/** Native Catalyst expression for URL canonicalization — the hot-path
-  * replacement for the Scala-UDF wrapper (GraftFunctions.canonicalizeUdf):
-  * participates in whole-stage codegen (no Scala-UDF encoder round trip,
-  * no closure serialization), null-safe, foldable for literal input.
-  *
-  * The algorithm itself lives in graft.core.UrlNormalizer (a pure
-  * static call from generated code).
+/** URL canonicalization as a native kernel (`canonicalize_url`): runs
+  * inside whole-stage codegen, with no Scala-UDF encoder round trip and
+  * no closure serialization. Null when the URL cannot be canonicalized
+  * (e.g. javascript: with no site). The algorithm lives in
+  * graft.core.UrlNormalizer.
   */
-case class CanonicalizeUrl(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "canonicalize_url"
-
-  override def nullSafeEval(input: Any): Any =
-    CanonicalizeUrl.invoke(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, url => {
-      s"""
-         |${ev.value} = graft.plans.CanonicalizeUrl.invoke($url);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): CanonicalizeUrl =
-    copy(child = newChild)
-}
-
 object CanonicalizeUrl {
-  /** Static entry point shared by interpreted and generated code. */
-  def invoke(url: UTF8String): UTF8String = {
-    if (url == null) return null
-    UrlNormalizer.canonicalize(url.toString) match {
-      case Some(c) => UTF8String.fromString(c)
-      case None => null
-    }
-  }
+  def invoke(url: UTF8String): UTF8String =
+    UrlNormalizer.canonicalize(url.toString).map(UTF8String.fromString).orNull
 
-  /** Column-level API. Requires the function to be registered in the
-    * session (GraftExtensions or [[register]]).
-    */
-  def canonicalize_url(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("canonicalize_url", c)
-
-  /** Imperative registration for sessions built without extensions. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "canonicalize_url", exprs => CanonicalizeUrl(exprs.head), "built-in")
-}
-
-/** Session extensions: registers `canonicalize_url` and `host_of` for
-  * SQL use. Attach with `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("canonicalize_url"),
-      new ExpressionInfo(classOf[CanonicalizeUrl].getName, "canonicalize_url"),
-      (children: Seq[Expression]) => CanonicalizeUrl(children.head)))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("host_of"),
-      new ExpressionInfo(classOf[HostOf].getName, "host_of"),
-      (children: Seq[Expression]) => HostOf(children.head)))
-  }
+  def canonicalize_url(c: Column): Column = Kernels.call("canonicalize_url", c)
 }

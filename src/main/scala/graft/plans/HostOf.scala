@@ -1,53 +1,18 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.UrlNormalizer
 
-/** Native Catalyst expression for URL → host extraction — keeps the
-  * wave loop's frontier-expansion projection (the hottest per-wave
-  * stage) fully inside whole-stage codegen, where the previous inline
-  * Scala UDF forced an encoder round trip per link (round-2 verdict,
-  * "What's wrong" #3). Same pattern as [[CanonicalizeUrl]].
+/** URL → host as a native kernel (`host_of`): keeps the wave loop's
+  * frontier-expansion projection (the hottest per-wave stage) fully
+  * inside whole-stage codegen, where an inline Scala UDF forced an
+  * encoder round trip per link.
   */
-case class HostOf(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "host_of"
-
-  override def nullSafeEval(input: Any): Any =
-    HostOf.invoke(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, url => {
-      s"""
-         |${ev.value} = graft.plans.HostOf.invoke($url);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): HostOf =
-    copy(child = newChild)
-}
-
 object HostOf {
-  /** Static entry point shared by interpreted and generated code. */
-  def invoke(url: UTF8String): UTF8String = {
-    if (url == null) return null
+  def invoke(url: UTF8String): UTF8String =
     UTF8String.fromString(UrlNormalizer.hostOf(url.toString))
-  }
 
-  /** Column-level API. Requires [[register]] (or GraftExtensions). */
-  def host_of(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("host_of", c)
-
-  /** Imperative registration for sessions built without extensions. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "host_of", exprs => HostOf(exprs.head), "built-in")
+  def host_of(c: Column): Column = Kernels.call("host_of", c)
 }

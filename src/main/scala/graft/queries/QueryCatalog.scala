@@ -355,13 +355,13 @@ object QueryCatalog {
   // ---------- crawl scalar ops over synthesized columns (SURVEY §2.2) ----------
 
   /** O1 URL canonicalization, oracle-checkable: messy synthesized URL →
-    * canonical via the real UDF; the oracle computes the expected
-    * string directly.
+    * canonical via the `canonicalize_url` kernel; the oracle computes
+    * the expected string directly.
     */
   def qUrlCanonicalize(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
       .select(col("doc_id"),
-        GraftFunctions.canonicalizeUdf(
+        graft.plans.CanonicalizeUrl.canonicalize_url(
           concat(lit("HTTP://"), upper(col("source")),
             lit(".Example.COM.:80/a/./p/"), col("doc_id"),
             lit("?utm_source=x&id="), col("doc_id"), lit("#frag")))
